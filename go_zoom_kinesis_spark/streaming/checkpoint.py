@@ -32,6 +32,26 @@ def pad_seq(seq: str | int) -> str:
     return str(seq).zfill(SEQ_PAD)
 
 
+def max_seq(seq_type, seq_col: str):
+    """Aggregate expression: the max of ``seq_col`` as a string that
+    orders like ``pad_seq`` (the driver strips leading zeros or calls
+    ``int``).
+
+    Integral columns aggregate natively and render ONE string per
+    group: for non-negative integers zero-padded lexicographic order IS
+    numeric order, so ``max(lpad(x)) == lpad(max(x))``, and padding per
+    row would build a 128-char string for every record just to
+    compare. Any other type (Kinesis's up-to-128-digit decimal strings
+    overflow ``long``) takes the max over zero-padded strings."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    if isinstance(seq_type, integral):
+        return F.max(F.col(seq_col)).cast("string")
+    return F.max(F.lpad(F.col(seq_col).cast("string"), SEQ_PAD, "0"))
+
+
 class CheckpointStore(Protocol):
     def get_checkpoint(self, shard_id: str) -> str | None: ...
 

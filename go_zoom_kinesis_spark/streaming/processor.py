@@ -63,7 +63,7 @@ from .retry import ShutdownRequested
 
 from . import monitoring as M
 from .backoff import ExponentialBackoff
-from .checkpoint import CheckpointStore, pad_seq
+from .checkpoint import CheckpointStore, max_seq, pad_seq
 from .monitoring import MetricsAggregator
 
 # --- initial positions (src/processor.rs:313-322) -----------------------
@@ -292,23 +292,37 @@ class StreamProcessor:
         attempt = 0
         batch_t0 = time.perf_counter()
         n_success = n_failed = n_soft_retries = 0
+        # per-shard max successful sequence across attempts: the
+        # checkpoint fold (src/processor.rs:1542-1560), kept unpadded
+        checkpoints: dict[str, str] = {}
         try:
             while True:
                 t0 = time.perf_counter()
                 out = self.processor(pending).cache()
                 cached.append(out)
                 # ONE action per attempt: the O(shards × outcomes) rollup
-                # both fills the monitoring events and yields the global
-                # outcome counts (src/processor.rs:1490-1525 classifies
-                # per record; the rollup is its batched equivalent)
+                # fills the monitoring events, yields the global outcome
+                # counts AND carries the checkpoint fold — its max_seq
+                # on the success rows (src/processor.rs:1490-1525
+                # classifies per record; the rollup is its batched
+                # equivalent)
+                seq_max = max_seq(out.schema[cfg.seq_col].dataType, cfg.seq_col)
                 outcome_rows = (
-                    out.groupBy(cfg.shard_col, "outcome").count().collect()
+                    out.groupBy(cfg.shard_col, "outcome")
+                    .agg(F.count(F.lit(1)).alias("count"), seq_max.alias("max_seq"))
+                    .collect()
                 )
                 ms = (time.perf_counter() - t0) * 1000
                 totals: dict[str, int] = {}
                 for shard_row in outcome_rows:
                     outcome = shard_row["outcome"]
                     totals[outcome] = totals.get(outcome, 0) + shard_row["count"]
+                    if outcome == "success" and shard_row["max_seq"] is not None:
+                        shard = str(shard_row[cfg.shard_col])
+                        seq = shard_row["max_seq"].lstrip("0") or "0"
+                        prev = checkpoints.get(shard)
+                        if prev is None or pad_seq(seq) > pad_seq(prev):
+                            checkpoints[shard] = seq
                     etype = {
                         "success": M.RECORD_SUCCESS,
                         "soft": M.RECORD_ATTEMPT,
@@ -384,6 +398,7 @@ class StreamProcessor:
                 items,
                 quarantined,
                 epoch_id,
+                checkpoints,
                 batch_stats={
                     "t0": batch_t0,
                     "records_success": n_success,
@@ -403,6 +418,7 @@ class StreamProcessor:
         items: DataFrame | None,
         quarantined: list[DataFrame],
         epoch_id: int,
+        checkpoints: dict[str, str],
         batch_stats: dict | None = None,
     ) -> None:
         cfg = self.config
@@ -440,51 +456,23 @@ class StreamProcessor:
             self.dlq_sink(dlq, epoch_id)
 
         # --- checkpoint commit (K1): max success seq per shard ----------
-        # Save failures retry with backoff rather than failing the batch
-        # — the reference's stall-don't-fail semantic ("checkpoint loss
-        # is worse than stalling", src/store/dynamodb.rs:137-163) with
-        # retry-forever as the default (src/retry/mod.rs:29). Shutdown
-        # interrupts the sleep, surfacing ShutdownRequested.
+        # ``checkpoints`` is the fold the attempt rollups already
+        # returned. Save failures retry with backoff rather than failing
+        # the batch — the reference's stall-don't-fail semantic
+        # ("checkpoint loss is worse than stalling",
+        # src/store/dynamodb.rs:137-163) with retry-forever as the
+        # default (src/retry/mod.rs:29). Shutdown interrupts the sleep,
+        # surfacing ShutdownRequested.
         n_ckpt = 0
-        if items is not None:
+        if checkpoints:
             from .retry import RetryHandle
 
-            # r14 (guide §2.3 — shuffle/aggregate fewer bytes): the
-            # padded-string max built a 128-char string PER ROW (2M
-            # rows ⇒ ~256 MB of transient strings per batch, measured
-            # ~1.4 s of the 7.1 s bench batch) just to make numeric
-            # and string sequence numbers order the same way. When the
-            # sequence column is integral the padding is pure loss:
-            # for non-negative integers, zero-padded lexicographic
-            # order IS numeric order, so max(lpad(x)) == lpad(max(x))
-            # — aggregate natively and render ONE string per shard.
-            # String-typed sequence columns (Kinesis's 128-digit
-            # decimals) keep the padded path unchanged.
-            from pyspark.sql import types as T
-
-            seq_type = items.schema[cfg.seq_col].dataType
-            if isinstance(
-                seq_type,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-            ):
-                max_seq = F.max(F.col(cfg.seq_col)).cast("string")
-            else:
-                max_seq = F.max(
-                    F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
-                )
-            rows = (
-                items.groupBy(cfg.shard_col)
-                .agg(max_seq.alias("max_seq"))
-                .collect()
-            )
             handle = RetryHandle(
                 max_retries=cfg.checkpoint_max_retries,
                 backoff=cfg.backoff,
                 shutdown=self.shutdown,
             )
-            for r in rows:
-                seq = r["max_seq"].lstrip("0") or "0"
-                shard = str(r[cfg.shard_col])
+            for shard, seq in checkpoints.items():
 
                 def save(attempt: int, shard: str = shard, seq: str = seq):
                     try:

@@ -245,6 +245,102 @@ def test_checkpoint_is_max_success_seq(spark, tmp_path, records):
     assert store.all_checkpoints() == expected
 
 
+def scripted(df):
+    """Outcome from the record's ``kind``: soft fails on attempt 0
+    only, hard always."""
+    return df.withColumn(
+        "outcome",
+        F.when(F.col("kind") == "hard", F.lit("hard"))
+        .when((F.col("kind") == "soft") & (F.col("attempt") == 0), F.lit("soft"))
+        .otherwise(F.lit("success")),
+    )
+
+
+def _run_scripted(spark, tmp_path, rows, seq_type, sink=None, dlq_sink=None):
+    store = InMemoryCheckpointStore()
+    proc = StreamProcessor(
+        spark,
+        scripted,
+        store,
+        ProcessorConfig(
+            checkpoint_location=str(tmp_path / "scripted"),
+            backoff=ExponentialBackoff(0.001, 0.002, jitter_factor=0),
+        ),
+        sink=sink,
+        dlq_sink=dlq_sink,
+        sleep=lambda s: None,
+    )
+    df = spark.createDataFrame(
+        rows, f"shard_id string, sequence_number {seq_type}, kind string"
+    )
+    proc.run_batch(df)
+    return store
+
+
+def test_checkpoint_fold_across_retries(spark, tmp_path):
+    """The checkpoint is the per-shard max over the success rows of
+    EVERY attempt: a shard's highest sequence that fails soft on
+    attempt 0 and succeeds on attempt 1 is its checkpoint; a shard with
+    only hard failures saves none."""
+    rows = [
+        ("a", 1, "ok"), ("a", 5, "ok"), ("a", 9, "soft"),  # max after retry
+        ("b", 2, "soft"), ("b", 7, "ok"),  # retry below attempt-0 max
+        ("c", 3, "hard"), ("c", 4, "hard"),  # nothing succeeds
+    ]
+    store = _run_scripted(spark, tmp_path, rows, "long")
+    assert store.all_checkpoints() == {"a": "9", "b": "7"}
+
+
+def test_checkpoint_fold_seq_wider_than_long(spark, tmp_path):
+    """100-digit string sequence numbers through ``run_batch``: the
+    fold across attempts compares numerically (padded), so a shorter
+    but lexicographically larger retry does not win."""
+    big = "1" + "0" * 99
+    rows = [
+        ("a", big, "ok"), ("a", "9" * 99, "soft"),  # retry is smaller
+        ("b", "5" * 99, "ok"), ("b", "7" * 100, "soft"),  # retry is larger
+        ("c", "8" * 100, "hard"),
+    ]
+    store = _run_scripted(spark, tmp_path, rows, "string")
+    assert store.all_checkpoints() == {"a": big, "b": "7" * 100}
+
+
+def test_run_batch_spark_job_count(spark, tmp_path):
+    """Pin the Spark jobs of one micro-batch with both real sinks: 8
+    shards × 100 records, 8 soft and 1 hard. Attempt 0 and attempt 1
+    each run ONE rollup action — three jobs under adaptive execution
+    (the cached transform, the shuffle map stage, the result) — then
+    the sink and the DLQ one ``commit_batch`` job each, and nothing
+    else: no Python-worker hop, no separate checkpoint aggregation."""
+    from go_zoom_kinesis_spark.sources.gzk_sink import commit_batch, read_committed
+    from tests.util import spark_jobs
+
+    soft = {(s, 10 * s + 5) for s in range(8)}
+    hard = {(3, 42)}
+    rows = [
+        (
+            f"shard-{s}",
+            q,
+            "hard" if (s, q) in hard else "soft" if (s, q) in soft else "ok",
+        )
+        for s in range(8)
+        for q in range(100)
+    ]
+    sink, dlq = str(tmp_path / "sink"), str(tmp_path / "dlq")
+    with spark_jobs(spark) as jobs:
+        store = _run_scripted(
+            spark, tmp_path, rows, "long",
+            sink=lambda df, e: commit_batch(df, sink, e),
+            dlq_sink=lambda df, e: commit_batch(df, dlq, e),
+        )
+    assert len(jobs) == 2 * 3 + 2
+    assert len(read_committed(sink)) == 799
+    assert [(r["shard_id"], r["sequence_number"]) for r in read_committed(dlq)] == [
+        ("shard-3", 42)
+    ]
+    assert store.all_checkpoints() == {f"shard-{s}": "99" for s in range(8)}
+
+
 def test_checkpoint_preferred_resume(spark, tmp_path, records):
     store = InMemoryCheckpointStore()
     ckpt = 500

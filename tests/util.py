@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
+from contextlib import contextmanager
 from datetime import date, datetime
 
 import duckdb
@@ -63,3 +65,20 @@ def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str, na
     if s != d:
         diffs = [(a, b) for a, b in zip(s, d) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch; first diffs: {diffs}")
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs the block runs: the block runs
+    under its own job group, and the listener bus is drained before the
+    group is read so no finished job is missed."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
