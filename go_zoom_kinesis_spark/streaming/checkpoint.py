@@ -32,6 +32,14 @@ def pad_seq(seq: str | int) -> str:
     return str(seq).zfill(SEQ_PAD)
 
 
+def seq_key(seq_col: str):
+    """Column expression: ``seq_col`` as a string that orders like
+    ``pad_seq``."""
+    from pyspark.sql import functions as F
+
+    return F.lpad(F.col(seq_col).cast("string"), SEQ_PAD, "0")
+
+
 def max_seq(seq_type, seq_col: str):
     """Aggregate expression: the max of ``seq_col`` as a string that
     orders like ``pad_seq`` (the driver strips leading zeros or calls
@@ -49,7 +57,7 @@ def max_seq(seq_type, seq_col: str):
     integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     if isinstance(seq_type, integral):
         return F.max(F.col(seq_col)).cast("string")
-    return F.max(F.lpad(F.col(seq_col).cast("string"), SEQ_PAD, "0"))
+    return F.max(seq_key(seq_col))
 
 
 class CheckpointStore(Protocol):

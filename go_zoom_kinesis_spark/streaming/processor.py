@@ -48,6 +48,7 @@ count (``limits.limit_shard_concurrency``).
 
 from __future__ import annotations
 
+import functools
 import threading
 import time
 import warnings
@@ -63,7 +64,7 @@ from .retry import ShutdownRequested
 
 from . import monitoring as M
 from .backoff import ExponentialBackoff
-from .checkpoint import CheckpointStore, max_seq, pad_seq
+from .checkpoint import CheckpointStore, max_seq, pad_seq, seq_key
 from .monitoring import MetricsAggregator
 
 # --- initial positions (src/processor.rs:313-322) -----------------------
@@ -145,9 +146,23 @@ class ProcessorConfig:
 
 
 # The user transform: DataFrame (+ attempt column) → DataFrame with an
-# `outcome` column ('success' | 'soft' | 'hard') and output columns.
+# `outcome` column (a key of OUTCOMES) and output columns.
 UserTransform = Callable[[DataFrame], DataFrame]
 ValidationHook = Callable[[DataFrame, int], None]
+
+
+# outcome → (monitoring event, DLQ reason); None = never quarantined.
+# ``soft`` quarantines only once its retries are exhausted.
+OUTCOMES = {
+    "success": (M.RECORD_SUCCESS, None),
+    "soft": (M.RECORD_ATTEMPT, "soft_exhausted"),
+    "hard": (M.RECORD_FAILURE, "hard_failure"),
+    "timeout": (M.RECORD_FAILURE, "processing_timeout"),
+}
+
+
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, frames) if frames else None
 
 
 class StreamProcessor:
@@ -188,40 +203,37 @@ class StreamProcessor:
 
     # --- positioning (S2/S3) -------------------------------------------
 
+    def _stream_head(self, df: DataFrame) -> str | None:
+        """The padded max sequence in ``df`` (None when empty): a full
+        scan of the sequence column, one aggregate row back."""
+        col = self.config.seq_col
+        m = df.select(max_seq(df.schema[col].dataType, col).alias("m")).first()["m"]
+        return None if m is None else pad_seq(m)
+
     def _initial_position_predicate(self, source_snapshot: DataFrame | None):
         """The configured initial position as an envelope predicate
         (src/processor.rs:313-322)."""
         cfg = self.config
         pos = cfg.initial_position
-        pad = F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
+        key = seq_key(cfg.seq_col)
         if isinstance(pos, TrimHorizon):
             return F.lit(True)
         if isinstance(pos, Latest):
-            if source_snapshot is None and cfg.source_path is not None:
+            if source_snapshot is not None:
+                head = self._stream_head(source_snapshot)
+            elif cfg.source_path is not None:
                 # Auto-snapshot: batch-read the stream's source path to
-                # pin the head — the max existing sequence — so only
-                # records arriving after processor start are processed
-                # (true Latest, src/processor.rs:825-837). One max()
-                # aggregate over the pruned seq column (footer-stat
-                # bounded, not a data read), memoized so restarts of
-                # the query on this processor keep the original cut.
+                # pin the head, so only records arriving after processor
+                # start are processed (true Latest, src/processor.rs:
+                # 825-837). Memoized so restarts of the query on this
+                # processor keep the original cut.
                 if not self._latest_head_resolved:
-                    snap = self.spark.read.format(cfg.source_format).load(
-                        cfg.source_path
+                    self._latest_head = self._stream_head(
+                        self.spark.read.format(cfg.source_format).load(cfg.source_path)
                     )
-                    row = snap.select(
-                        F.max(
-                            F.lpad(
-                                F.col(cfg.seq_col).cast("string"), 128, "0"
-                            )
-                        ).alias("m")
-                    ).collect()[0]
-                    self._latest_head = row["m"]
                     self._latest_head_resolved = True
-                if self._latest_head is None:
-                    return F.lit(True)
-                return pad > F.lit(self._latest_head)
-            if source_snapshot is None:
+                head = self._latest_head
+            else:
                 # Without a snapshot or a source_path there is no "max
                 # sequence at start": the filter degrades to
                 # TrimHorizon. Warn loudly — the reference's Latest
@@ -234,12 +246,9 @@ class StreamProcessor:
                     stacklevel=3,
                 )
                 return F.lit(True)
-            row = source_snapshot.select(
-                F.max(F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")).alias("m")
-            ).collect()[0]
-            return pad > F.lit(row["m"]) if row["m"] is not None else F.lit(True)
+            return F.lit(True) if head is None else key > F.lit(head)
         if isinstance(pos, AtSequenceNumber):
-            return pad >= F.lit(pad_seq(pos.sequence_number))
+            return key >= F.lit(pad_seq(pos.sequence_number))
         if isinstance(pos, AtTimestamp):
             return F.col(cfg.ts_col) >= F.lit(pos.timestamp)
         raise TypeError(f"unknown initial position {pos!r}")
@@ -252,23 +261,22 @@ class StreamProcessor:
         Shards with a stored checkpoint resume strictly after it; shards
         absent from the store (e.g. children that appeared after a
         reshard, P7) fall back to the *configured initial position*,
-        exactly the reference's per-shard branch — not TrimHorizon."""
+        exactly the reference's per-shard branch — not TrimHorizon. The
+        checkpoints are ONE map literal, so the plan stays the same size
+        whatever the shard count."""
         cfg = self.config
-        pad = F.lpad(F.col(cfg.seq_col).cast("string"), 128, "0")
-
-        if cfg.prefer_stored_checkpoint and hasattr(self.store, "all_checkpoints"):
-            ckpts = self.store.all_checkpoints()
-            if ckpts:
-                # AfterSequenceNumber per shard: seq > checkpoint
-                conds = None
-                for shard, seq in ckpts.items():
-                    c = (F.col(cfg.shard_col) == shard) & (pad > pad_seq(seq))
-                    conds = c if conds is None else conds | c
-                unknown = ~F.col(cfg.shard_col).isin(list(ckpts))
-                init_pred = self._initial_position_predicate(source_snapshot)
-                return conds | (unknown & init_pred)
-
-        return self._initial_position_predicate(source_snapshot)
+        init_pred = self._initial_position_predicate(source_snapshot)
+        if not (cfg.prefer_stored_checkpoint and hasattr(self.store, "all_checkpoints")):
+            return init_pred
+        ckpts = self.store.all_checkpoints()
+        if not ckpts:
+            return init_pred
+        resume_after = F.create_map(
+            *[F.lit(x) for shard, seq in ckpts.items() for x in (shard, pad_seq(seq))]
+        )[F.col(cfg.shard_col).cast("string")]
+        return F.when(resume_after.isNull(), init_pred).otherwise(
+            seq_key(cfg.seq_col) > resume_after
+        )
 
     # --- the foreachBatch body (T1/T2/K1/K2) ---------------------------
 
@@ -316,59 +324,44 @@ class StreamProcessor:
                 totals: dict[str, int] = {}
                 for shard_row in outcome_rows:
                     outcome = shard_row["outcome"]
+                    etype, reason = OUTCOMES[outcome]
+                    shard = str(shard_row[cfg.shard_col])
                     totals[outcome] = totals.get(outcome, 0) + shard_row["count"]
                     if outcome == "success" and shard_row["max_seq"] is not None:
-                        shard = str(shard_row[cfg.shard_col])
                         seq = shard_row["max_seq"].lstrip("0") or "0"
                         prev = checkpoints.get(shard)
                         if prev is None or pad_seq(seq) > pad_seq(prev):
                             checkpoints[shard] = seq
-                    etype = {
-                        "success": M.RECORD_SUCCESS,
-                        "soft": M.RECORD_ATTEMPT,
-                        "hard": M.RECORD_FAILURE,
-                        "timeout": M.RECORD_FAILURE,
-                    }[outcome]
                     agg.emit(
-                        str(shard_row[cfg.shard_col]),
+                        shard,
                         etype,
                         count=shard_row["count"],
                         processing_ms=ms,
-                        **({"reason": "processing_timeout"} if outcome == "timeout" else {}),
+                        **({"reason": reason} if etype == M.RECORD_FAILURE else {}),
                     )
                 n_soft = totals.get("soft", 0)
                 n_success += totals.get("success", 0)
-                n_failed += totals.get("hard", 0) + totals.get("timeout", 0)
-
                 if totals.get("success", 0):
                     successes.append(out.filter(F.col("outcome") == "success"))
-                if totals.get("hard", 0):
-                    # hard ⇒ skip permanently, continue (src/processor.rs:1511-1514)
-                    quarantined.append(
-                        out.filter(F.col("outcome") == "hard").withColumn(
-                            "dlq_reason", F.lit("hard_failure")
-                        )
-                    )
-                if totals.get("timeout", 0):
-                    # per-record processing timeout (T3): quarantine like a
-                    # hard failure, batch completes (src/processor.rs:1520-1522)
-                    quarantined.append(
-                        out.filter(F.col("outcome") == "timeout").withColumn(
-                            "dlq_reason", F.lit("processing_timeout")
-                        )
-                    )
 
-                if n_soft == 0:
-                    break
-                if attempt + 1 >= cfg.max_attempts:
-                    # soft retries exhausted ⇒ quarantine (bounded-retry
-                    # semantic change from the reference's retry-forever)
-                    n_failed += n_soft
+                # hard and timeout rows quarantine on every attempt
+                # (src/processor.rs:1511-1514, 1520-1522); soft rows only
+                # once retries are exhausted (bounded-retry semantic
+                # change from the reference's retry-forever)
+                last = attempt + 1 >= cfg.max_attempts
+                failed = [o for o, (_, r) in OUTCOMES.items() if r and (o != "soft" or last)]
+                n_quarantined = sum(totals.get(o, 0) for o in failed)
+                n_failed += n_quarantined
+                if n_quarantined:
+                    reasons = F.create_map(
+                        *[F.lit(x) for o in failed for x in (o, OUTCOMES[o][1])]
+                    )
                     quarantined.append(
-                        out.filter(F.col("outcome") == "soft").withColumn(
-                            "dlq_reason", F.lit("soft_exhausted")
+                        out.filter(F.col("outcome").isin(failed)).withColumn(
+                            "dlq_reason", reasons[F.col("outcome")]
                         )
                     )
+                if n_soft == 0 or last:
                     break
                 n_soft_retries += n_soft
                 # graceful shutdown with pending records (P6,
@@ -389,23 +382,16 @@ class StreamProcessor:
                     .withColumn("attempt", F.lit(attempt))
                 )
 
-            items = None
-            if successes:
-                items = successes[0]
-                for s in successes[1:]:
-                    items = items.unionByName(s)
             self._finish_batch(
-                items,
-                quarantined,
+                _union(successes),
+                _union(quarantined),
                 epoch_id,
                 checkpoints,
-                batch_stats={
-                    "t0": batch_t0,
-                    "records_success": n_success,
-                    "records_failed": n_failed,
-                    "soft_retries": n_soft_retries,
-                    "attempt_passes": attempt + 1,
-                },
+                batch_t0,
+                records_success=n_success,
+                records_failed=n_failed,
+                soft_retries=n_soft_retries,
+                attempt_passes=attempt + 1,
             )
         finally:
             # per-attempt caches would otherwise accumulate for the
@@ -416,10 +402,14 @@ class StreamProcessor:
     def _finish_batch(
         self,
         items: DataFrame | None,
-        quarantined: list[DataFrame],
+        dlq: DataFrame | None,
         epoch_id: int,
         checkpoints: dict[str, str],
-        batch_stats: dict | None = None,
+        t0: float,
+        records_success: int,
+        records_failed: int,
+        soft_retries: int,
+        attempt_passes: int,
     ) -> None:
         cfg = self.config
         agg = self.aggregator
@@ -449,10 +439,7 @@ class StreamProcessor:
         # --- sinks ------------------------------------------------------
         if items is not None and self.sink is not None:
             self.sink(items, epoch_id)
-        if quarantined and self.dlq_sink is not None:
-            dlq = quarantined[0]
-            for q in quarantined[1:]:
-                dlq = dlq.unionByName(q)
+        if dlq is not None and self.dlq_sink is not None:
             self.dlq_sink(dlq, epoch_id)
 
         # --- checkpoint commit (K1): max success seq per shard ----------
@@ -485,20 +472,21 @@ class StreamProcessor:
                 agg.emit(shard, M.CHECKPOINT_SUCCESS, seq=seq)
                 n_ckpt += 1
 
-        if batch_stats is not None:
-            # duration covers the WHOLE batch: attempts, validation,
-            # sinks, and the checkpoint commit that just finished
-            t0 = batch_stats.pop("t0")
-            agg.emit(
-                "GLOBAL",
-                M.BATCH_METRICS,
-                metrics=M.BatchMetrics(
-                    epoch=epoch_id,
-                    duration_ms=(time.perf_counter() - t0) * 1000,
-                    checkpoints_saved=n_ckpt,
-                    **batch_stats,
-                ),
-            )
+        # duration covers the WHOLE batch: attempts, validation, sinks,
+        # and the checkpoint commit that just finished
+        agg.emit(
+            "GLOBAL",
+            M.BATCH_METRICS,
+            metrics=M.BatchMetrics(
+                epoch=epoch_id,
+                duration_ms=(time.perf_counter() - t0) * 1000,
+                records_success=records_success,
+                records_failed=records_failed,
+                soft_retries=soft_retries,
+                attempt_passes=attempt_passes,
+                checkpoints_saved=n_ckpt,
+            ),
+        )
         agg.emit("GLOBAL", M.BATCH_COMPLETE, epoch=epoch_id)
 
     # --- run (streaming) -----------------------------------------------

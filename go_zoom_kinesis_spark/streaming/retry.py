@@ -9,7 +9,6 @@
 from __future__ import annotations
 
 import threading
-import time
 from collections.abc import Callable
 from typing import TypeVar
 
@@ -35,12 +34,10 @@ class RetryHandle:
         max_retries: int | None = 3,
         backoff: ExponentialBackoff | None = None,
         shutdown: threading.Event | None = None,
-        sleep: Callable[[float], None] = time.sleep,
     ):
         self.max_retries = max_retries
         self.backoff = backoff or ExponentialBackoff()
         self.shutdown = shutdown or threading.Event()
-        self._sleep = sleep
 
     def retry(self, op: Callable[[int], T]) -> T:
         """Run ``op(attempt)`` until success / exhaustion / shutdown."""

@@ -71,7 +71,7 @@ def test_retry_success_after_n():
             raise ValueError("soft")
         return "ok"
 
-    h = RetryHandle(max_retries=5, backoff=ExponentialBackoff(0.001, 0.002), sleep=lambda s: None)
+    h = RetryHandle(max_retries=5, backoff=ExponentialBackoff(0.001, 0.002))
     assert h.retry(op) == "ok"
     assert calls == [0, 1, 2]
 
@@ -339,6 +339,101 @@ def test_run_batch_spark_job_count(spark, tmp_path):
         ("shard-3", 42)
     ]
     assert store.all_checkpoints() == {f"shard-{s}": "99" for s in range(8)}
+
+
+def test_mixed_failures_one_quarantine_frame_per_attempt(spark, tmp_path):
+    """hard, timeout and soft-exhausted rows in ONE batch
+    (``max_attempts=2``): every DLQ row carries its outcome's reason,
+    whichever attempt failed it, ``BatchMetrics.records_failed`` counts
+    them all, and the DLQ is still one ``commit_batch`` job."""
+    from go_zoom_kinesis_spark.sources.gzk_sink import commit_batch, read_committed
+    from tests.util import spark_jobs
+
+    def transform(df):
+        retry = F.col("attempt") > 0
+        kind = F.col("kind")
+        return df.withColumn(
+            "outcome",
+            F.when(kind.isin("hard", "timeout", "soft"), kind)
+            .when(
+                kind.startswith("soft_then_"),
+                F.when(retry, F.regexp_replace(kind, "^soft_then_", "")).otherwise("soft"),
+            )
+            .otherwise(F.lit("success")),
+        )
+
+    rows = [
+        ("a", 1, "ok"), ("a", 2, "hard"), ("a", 3, "timeout"), ("a", 4, "soft"),
+        ("a", 5, "soft_then_success"), ("b", 6, "soft"), ("b", 7, "hard"),
+        ("b", 8, "ok"), ("b", 9, "soft_then_hard"), ("b", 10, "soft_then_timeout"),
+    ]
+    dlq_path = str(tmp_path / "dlq")
+    dlq_jobs: list[int] = []
+
+    def dlq_sink(df, epoch):
+        with spark_jobs(spark) as jobs:
+            commit_batch(df, dlq_path, epoch)
+        dlq_jobs.append(len(jobs))
+
+    sunk: list = []
+    agg = MetricsAggregator()
+    proc = StreamProcessor(
+        spark, transform, InMemoryCheckpointStore(),
+        ProcessorConfig(
+            checkpoint_location=str(tmp_path / "mixed"),
+            max_attempts=2,
+            backoff=ExponentialBackoff(0.001, 0.002, jitter_factor=0),
+        ),
+        aggregator=agg,
+        sink=lambda df, e: sunk.extend(df.collect()),
+        dlq_sink=dlq_sink,
+        sleep=lambda s: None,
+    )
+    proc.run_batch(
+        spark.createDataFrame(rows, "shard_id string, sequence_number long, kind string")
+    )
+
+    assert sorted(r["sequence_number"] for r in sunk) == [1, 5, 8]
+    assert dlq_jobs == [1]
+    dlq = read_committed(dlq_path)
+    assert len(dlq) == 7
+    assert {r["sequence_number"]: r["dlq_reason"] for r in dlq} == {
+        2: "hard_failure", 3: "processing_timeout", 4: "soft_exhausted",
+        6: "soft_exhausted", 7: "hard_failure", 9: "hard_failure",
+        10: "processing_timeout",
+    }
+    (bm,) = [e.detail["metrics"] for e in agg.events if e.event_type == M.BATCH_METRICS]
+    assert (bm.records_success, bm.records_failed, bm.attempt_passes) == (3, 7, 2)
+
+
+def test_resume_filter_thousands_of_shards(spark, tmp_path):
+    """Stored checkpoints for 2 048 shards: the resume filter stays one
+    map lookup (a per-shard OR chain overflows the JVM stack at this
+    size). Each shard resumes strictly after its own checkpoint; shards
+    with none start at the configured AtSequenceNumber."""
+    n = 2048
+    store = InMemoryCheckpointStore()
+    for i in range(n):
+        store.save_checkpoint(f"s{i}", str(i + 1))
+    rows = [(f"s{i}", i + d) for i in range(n) for d in range(3)]
+    rows += [(f"new-{j}", q) for j in range(4) for q in (4998, 4999, 5000, 5001)]
+    sunk: list = []
+    proc = StreamProcessor(
+        spark,
+        lambda df: df.withColumn("outcome", F.lit("success")),
+        store,
+        ProcessorConfig(
+            checkpoint_location=str(tmp_path / "wide"),
+            initial_position=AtSequenceNumber("5000"),
+        ),
+        sink=lambda df, e: sunk.extend(df.collect()),
+    )
+    proc.run_batch(spark.createDataFrame(rows, "shard_id string, sequence_number long"))
+
+    expected = {(f"s{i}", i + 2) for i in range(n)}
+    expected |= {(f"new-{j}", q) for j in range(4) for q in (5000, 5001)}
+    assert {(r["shard_id"], r["sequence_number"]) for r in sunk} == expected
+    assert len(sunk) == len(expected)
 
 
 def test_checkpoint_preferred_resume(spark, tmp_path, records):
@@ -880,6 +975,43 @@ def test_latest_auto_snapshot_true_latest(spark, tmp_path, records):
         ).collect()
     )
     assert got == expected
+
+
+def test_latest_snapshot_head_wider_than_long(spark, tmp_path):
+    """Latest through ``source_snapshot`` over 100-digit string
+    sequences: the head is the snapshot's numeric max, and only rows
+    numerically above it pass — a shorter sequence that sorts above the
+    head as a plain string does not."""
+    head = "1" + "0" * 99
+    history = [("a", head), ("b", "3" * 60)]
+    arrivals = [
+        ("a", "9" * 99), ("b", "5" * 50),  # above the head as strings only
+        ("a", "1" + "0" * 98 + "1"), ("b", "2" + "0" * 99),
+    ]
+    schema = "shard_id string, sequence_number string"
+    src_dir = str(tmp_path / "wide_src")
+    spark.createDataFrame(history + arrivals, schema).write.parquet(src_dir)
+
+    sunk: list = []
+    proc = StreamProcessor(
+        spark,
+        lambda df: df.withColumn("outcome", F.lit("success")),
+        InMemoryCheckpointStore(),
+        ProcessorConfig(
+            checkpoint_location=str(tmp_path / "wide_ckpt"),
+            initial_position=Latest(),
+            total_timeout=120.0,
+        ),
+        sink=lambda df, e: sunk.extend(df.collect()),
+    )
+    q = proc.run_stream(
+        spark.readStream.schema(schema).parquet(src_dir),
+        source_snapshot=spark.createDataFrame(history, schema),
+    )
+    assert proc.await_with_timeout(q)
+    assert sorted(r["sequence_number"] for r in sunk) == sorted(
+        ["1" + "0" * 98 + "1", "2" + "0" * 99]
+    )
 
 
 # --- iterator-expiry recovery P5 (↔ test_suite.rs:102-256) --------------
